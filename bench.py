@@ -522,14 +522,16 @@ def _emit(report: dict, line: dict | None = None) -> None:
         # COMMITTED compact file (per-query medians + condensed env
         # only, no fingerprint tail) lets any later round rebuild
         # bench_vs_prev from the repo alone. Last full-headline run of
-        # a round wins — subset sessions must not shadow it.
+        # a round at a given core count wins — subset sessions must not
+        # shadow it, and neither may a scaling leg on other cores.
         if report.get("subset", "headline") == "headline":
+            cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                                      os.cpu_count() or 0))
             summary = {
                 "round": rnd, "value": report.get("value"),
                 "core_total": report.get("core_total"),
                 "unit": "sec", "sf": report.get("sf"),
-                "cpus": int(os.environ.get("SPARK_GRAFT_CPUS",
-                                           os.cpu_count() or 0)),
+                "cpus": cpus,
                 "queries": report.get("queries"),
                 "sessions": report.get("sessions"),
                 "env": line.get("env"),
@@ -538,7 +540,7 @@ def _emit(report: dict, line: dict | None = None) -> None:
                 "method": report.get("method"),
                 "artifact": f"artifacts/{dest.name}",
             }
-            with open(Path(_REPO) / f"BENCH_SUMMARY_r{rnd}.json",
+            with open(Path(_REPO) / f"BENCH_SUMMARY_r{rnd}_c{cpus}.json",
                       "w") as f:
                 json.dump(summary, f, indent=1)
     except Exception as exc:  # noqa: BLE001 — artifact is best-effort

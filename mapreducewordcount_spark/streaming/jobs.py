@@ -16,6 +16,26 @@ assertion, not a hope:
   ``session_window`` state machine (the streaming twin of
   ``operators/sessionize.py``).
 
+The other ``stream_*`` functions follow the same pattern: sketches
+(CMS cells, HLL registers), state-store operators
+(``applyInPandasWithState``: running totals, event transitions, token
+budgets), watermark-bounded dedup, joins and stateless filters.
+
+Jobs whose state is too large or too structured for the state store
+keep it as versioned parquet and run on one loop,
+:func:`versioned_state_loop`, which owns the version contract:
+
+- ``start_cms_heavy_hitters`` — bounded-state streaming top-k;
+- ``start_source_drift_monitor`` — per-source TV drift report;
+- ``start_cdc_agg_refresh`` — incremental view over a CDC feed;
+- ``start_chunk_index_maintenance`` — content-defined chunk index;
+- ``start_reservoir_maintenance`` — running bottom-k sample;
+- ``start_ann_index_maintenance`` — IVF-PQ codes index append.
+
+``start_wordcount_to_reference_sink`` keeps no state of its own: it
+rewrites the reference ``out-<bucket>`` layout from each complete
+micro-batch.
+
 All jobs take source/sink through parameters so tests can drive them
 file→memory while production drives kafka→parquet; the plan is
 identical either way.
@@ -23,11 +43,18 @@ identical either way.
 
 from __future__ import annotations
 
+import logging
+import os
+import time
+from functools import partial
+
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mapreducewordcount_spark.functions.tokenize import tokenize_expr
+
+log = logging.getLogger(__name__)
 
 
 def stream_word_counts(lines: DataFrame) -> DataFrame:
@@ -97,16 +124,14 @@ def start_cms_heavy_hitters(lines: DataFrame, *, state_dir: str,
                             out_dir: str, checkpoint_dir: str,
                             k: int = 20, pool: int | None = None):
     """Bounded-state streaming TOP-K — the classic CMS + candidate
-    heap composition (VERDICT r10 next#8): ``stream_cms_cells`` keeps
-    the running frequency sketch, and a ``pool``-bounded candidate
-    set tracks the words that might be heavy. Pairs the streaming
-    family with the batch ``heavy_hitters_words`` the way
-    ``stream_cms_cells`` pairs with ``sketch_cms_words``.
+    heap composition: ``stream_cms_cells`` keeps the running
+    frequency sketch, and a ``pool``-bounded candidate set tracks the
+    words that might be heavy. Pairs the streaming family with the
+    batch ``heavy_hitters_words`` the way ``stream_cms_cells`` pairs
+    with ``sketch_cms_words``.
 
-    Per micro-batch ``b`` (foreachBatch; versioned-parquet state like
-    :func:`start_cdc_agg_refresh`, but NO caller seed — the sketch
-    legitimately starts from nothing, so an absent state dir IS the
-    empty state):
+    Runs on :func:`versioned_state_loop` with no seed (an absent state
+    dir is the empty sketch). Per micro-batch ``b``:
 
     - merge the batch's CMS cells into ``{state_dir}/cells/v{b+1}``
       (integer cell sums — merge-order invariant, so the running
@@ -119,17 +144,15 @@ def start_cms_heavy_hitters(lines: DataFrame, *, state_dir: str,
 
     State is ≤ DEPTH×WIDTH + pool rows FOREVER (vs
     ``stream_word_counts``' vocabulary-sized state); per-batch work
-    is O(batch + sketch + pool). Version-addressed overwrites make
-    redelivery idempotent (the CDC-job contract). The self-correcting
-    property worth naming: because the sketch is GLOBAL, a word
-    re-entering the candidate set gets its full cumulative estimate,
-    not a from-now count — an evicted heavy hitter is recovered the
-    next time it occurs at all. The honest miss case is a word whose
-    occurrences ALL precede its eviction and which never recurs;
-    SpaceSaving-style pool sizing (pool ≫ k, default 4k) bounds how
-    heavy such a word can be (it must sit below the pool's floor
-    estimate at eviction time). Batch parity across a planted batch
-    boundary is pytest-pinned (tests/test_stream_transitions.py).
+    is O(batch + sketch + pool). The self-correcting property worth
+    naming: because the sketch is GLOBAL, a word re-entering the
+    candidate set gets its full cumulative estimate, not a from-now
+    count — an evicted heavy hitter is recovered the next time it
+    occurs at all. The honest miss case is a word whose occurrences
+    ALL precede its eviction and which never recurs; SpaceSaving-style
+    pool sizing (pool ≫ k, default 4k) bounds how heavy such a word
+    can be (it must sit below the pool's floor estimate at eviction
+    time).
 
     Returns the started StreamingQuery (caller stops it).
     """
@@ -141,24 +164,14 @@ def start_cms_heavy_hitters(lines: DataFrame, *, state_dir: str,
     spark = lines.sparkSession
     pool = pool if pool is not None else 4 * k
 
-    def refresh(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch = batch_df.localCheckpoint(eager=True)  # cut stream lineage
+    def step(batch: DataFrame, prev, batch_id: int, in_version) -> None:
         words = batch.select(
             F.explode(tokenize_expr("value")).alias("word"))
         bcells = cms_build(words)
-        # replay-input resolution (ADVICE r11): highest version ≤
-        # batch_id — empty batches leave holes, min(batch_id, latest)
-        # would read one and crash-loop the restarted stream
-        in_version = latest_state_version(spark, f"{state_dir}/cells",
-                                          at_most=batch_id)
-        if in_version is None:
+        if prev is None:
             merged = bcells
             prev_cand = words.select("word").limit(0)
         else:
-            prev = read_state_version(spark, f"{state_dir}/cells",
-                                      in_version)
             merged = (prev.unionByName(bcells)
                       .groupBy("d", "cell").agg(F.sum("c").alias("c")))
             prev_cand = read_state_version(
@@ -179,9 +192,10 @@ def start_cms_heavy_hitters(lines: DataFrame, *, state_dir: str,
          .orderBy(F.col("cms_count").desc(), "word").limit(k)
          .write.mode("overwrite").parquet(f"{out_dir}/v{batch_id + 1}"))
 
-    return (lines.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(refresh).start())
+    return versioned_state_loop(lines, step,
+                                state_dir=f"{state_dir}/cells",
+                                checkpoint_dir=checkpoint_dir,
+                                seeded=False)
 
 
 def start_source_drift_monitor(docs: DataFrame, *, state_dir: str,
@@ -190,18 +204,16 @@ def start_source_drift_monitor(docs: DataFrame, *, state_dir: str,
                                text_col: str = "text"):
     """Streaming twin of ``source_drift_tv`` (queries/pipeline10):
     maintain per-(source, bucket) hashed-token counts as bounded
-    versioned state (≤ |sources| × 1024 rows — cell sums are
-    mergeable exactly like the CMS twin's) and emit the cumulative
-    per-source TV-vs-rest report each micro-batch — the live
-    off-distribution alarm for a crawl feed.
+    state under ``{state_dir}/cnt`` (≤ |sources| × 1024 rows — cell
+    sums are mergeable exactly like the CMS twin's) and emit the
+    cumulative per-source TV-vs-rest report to ``{out_dir}/v{b+1}``
+    each micro-batch — the live off-distribution alarm for a crawl
+    feed.
 
-    State/versioning contract matches :func:`start_cms_heavy_hitters`
-    (foreachBatch, version-addressed overwrites, no caller seed —
-    absent state IS the empty sketch). Because bucket counts are
-    merge-order invariant integer sums, the final emission equals the
-    batch operator over the union of all micro-batches — pinned
-    across a planted batch boundary in
-    tests/test_stream_transitions.py.
+    Runs on :func:`versioned_state_loop` with no seed (absent state
+    is the empty count table). Because bucket counts are merge-order
+    invariant integer sums, the final emission equals the batch
+    operator over the union of all micro-batches.
 
     Returns the started StreamingQuery (caller stops it).
     """
@@ -212,19 +224,10 @@ def start_source_drift_monitor(docs: DataFrame, *, state_dir: str,
 
     spark = docs.sparkSession
 
-    def refresh(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch = batch_df.localCheckpoint(eager=True)  # cut stream lineage
+    def step(batch: DataFrame, prev, batch_id: int, in_version) -> None:
         bcnt = token_bucket_counts(batch, group_col=source_col,
                                    text_col=text_col)
-        # replay-input resolution (ADVICE r11): highest version ≤
-        # batch_id, never a hole left by an empty predecessor batch
-        in_version = latest_state_version(spark, f"{state_dir}/cnt",
-                                          at_most=batch_id)
-        if in_version is not None:
-            prev = read_state_version(spark, f"{state_dir}/cnt",
-                                      in_version)
+        if prev is not None:
             bcnt = (prev.unionByName(bcnt)
                     .groupBy("grp", "bucket")
                     .agg(F.sum("c").alias("c")))
@@ -234,9 +237,10 @@ def start_source_drift_monitor(docs: DataFrame, *, state_dir: str,
         tv_drift_vs_rest(merged).write.mode("overwrite").parquet(
             f"{out_dir}/v{batch_id + 1}")
 
-    return (docs.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(refresh).start())
+    return versioned_state_loop(docs, step,
+                                state_dir=f"{state_dir}/cnt",
+                                checkpoint_dir=checkpoint_dir,
+                                seeded=False)
 
 
 def stream_hourly_events(events: DataFrame,
@@ -772,25 +776,30 @@ def stream_source_token_budget_tws(docs: DataFrame,
                 timeMode="None"))
 
 
-# --- streaming CDC: incremental view maintenance over a change feed ---------
+# --- versioned state: one loop for the maintenance jobs ---------------------
+
+def _committed_versions(state_dir: str) -> list[int]:
+    """Sorted version numbers of the committed ``v<N>`` subdirectories.
+
+    Spark's file committer writes ``_SUCCESS`` after every part file is
+    in place, so a ``v<N>`` without it is a write still in flight, or a
+    crashed one that the redelivered batch will overwrite. Neither may
+    be read."""
+    if not os.path.isdir(state_dir):
+        return []
+    return sorted(int(name[1:]) for name in os.listdir(state_dir)
+                  if name.startswith("v") and name[1:].isdigit()
+                  and os.path.exists(
+                      os.path.join(state_dir, name, "_SUCCESS")))
+
 
 def latest_state_version(spark, state_dir: str,
                          at_most: int | None = None) -> int | None:
-    """Highest committed ``v<N>`` subdirectory of a versioned state
-    dir, or None when unseeded. ``at_most`` bounds the search: the
-    replay-input resolution (ADVICE r11) — a redelivered batch reads
-    the highest version ≤ its batch id, NOT ``v{batch_id}`` blindly,
-    because an empty predecessor batch writes no version at all and
-    ``min(batch_id, latest)`` would then name a hole and crash-loop
-    the stream on every restart."""
-    import os
-
-    if not os.path.isdir(state_dir):
-        return None
-    versions = [int(name[1:]) for name in os.listdir(state_dir)
-                if name.startswith("v") and name[1:].isdigit()
-                and (at_most is None or int(name[1:]) <= at_most)]
-    return max(versions) if versions else None
+    """Highest committed ``v<N>`` of a plain versioned state dir, at
+    most ``at_most`` when given; None when there is none."""
+    versions = [v for v in _committed_versions(state_dir)
+                if at_most is None or v <= at_most]
+    return versions[-1] if versions else None
 
 
 def read_state_version(spark, state_dir: str,
@@ -804,52 +813,118 @@ def read_state_version(spark, state_dir: str,
 
 
 def gc_versioned_state(state_dir: str, keep_last: int = 2) -> dict:
-    """Retention for PLAIN versioned-parquet state dirs — the
-    manifest-GC analog for the simple format (every version is a
-    full self-contained copy, so GC is just dropping old ``v<N>``
-    dirs): keep the ``keep_last`` HIGHEST committed versions, delete
-    the rest. Version sequences legitimately have holes (empty
-    batches commit nothing), so "last K" counts existing versions,
-    not ids. Same contract as ``gc_manifest_state``: run from the
-    commit thread (the loops' ``gc_every_n_batches``) or with the
-    stream stopped; ``keep_last`` ≥ 2 covers the replay horizon
-    (a redelivered batch reads the highest version ≤ its id).
-    Idempotent; returns {kept_versions, removed_versions}."""
-    import os
+    """Retention for plain versioned state: every version is a full
+    copy, so GC keeps the ``keep_last`` highest committed versions and
+    deletes the older committed ones. "Last K" counts existing
+    versions, not ids, because empty batches leave holes. Uncommitted
+    dirs are left alone: they may be a write in flight. Idempotent;
+    returns {kept_versions, removed_versions}."""
     import shutil
 
     if keep_last < 1:
         raise ValueError(f"keep_last must be >= 1, got {keep_last}")
-    if not os.path.isdir(state_dir):
-        return {"kept_versions": [], "removed_versions": []}
-    versions = sorted(int(n[1:]) for n in os.listdir(state_dir)
-                      if n.startswith("v") and n[1:].isdigit())
-    kept = versions[-keep_last:]
-    removed = []
-    for v in versions[:-keep_last] if len(versions) > keep_last else []:
+    versions = _committed_versions(state_dir)
+    kept, removed = versions[-keep_last:], versions[:-keep_last]
+    for v in removed:
         shutil.rmtree(os.path.join(state_dir, f"v{v}"))
-        removed.append(v)
     return {"kept_versions": kept, "removed_versions": removed}
 
 
-def _check_loop_gc_keep_last(gc_every_n_batches, gc_keep_last) -> None:
-    """Replay-horizon floor for LOOP-WIRED GC (ADVICE r12). With
-    ``keep_last=1``, a crash between the ``v{b+1}`` state write and
-    the streaming-checkpoint commit leaves no version ≤ b: GC already
-    deleted ``v{≤b}``, so the redelivered batch resolves
-    ``latest_state_version(at_most=b)`` to None — seeded jobs raise,
-    but the reservoir's no-seed contract treats None as EMPTY state
-    and silently resets the accumulated sample. ``keep_last=1`` stays
-    legal only for offline/manual :func:`gc_versioned_state` use
-    (stream stopped ⇒ no redelivery window)."""
+def versioned_state_loop(stream: DataFrame, step, *, state_dir: str,
+                         checkpoint_dir: str, seeded: bool,
+                         state_format: str = "versioned",
+                         gc_every_n_batches: int | None = None,
+                         gc_keep_last: int = 2):
+    """Start ``stream`` with ``step`` run once per non-empty micro-batch
+    over versioned state. This is the single home of the contract the
+    maintenance jobs share.
+
+    **Versions.** Micro-batch ``b`` reads the highest committed state
+    version ``≤ b`` and its step overwrites version ``b+1`` of every
+    output it owns. Spark re-issues a batch whose checkpoint commit was
+    lost (say, a crash after the state write), and the re-issued batch
+    re-reads its original input and rewrites its own output, so
+    redelivery is idempotent. Empty batches are skipped before any
+    other Spark action and commit nothing, which leaves holes in the
+    version sequence: resolution therefore never reads ``v{b}``
+    blindly.
+
+    **Layouts**, chosen once from ``state_format``: ``"versioned"``
+    keeps one full parquet copy per ``{state_dir}/v<N>``, committed
+    once Spark's ``_SUCCESS`` marker is in it; ``"manifest"``
+    (``streaming/manifest_state``) keeps immutable segments named by
+    ``manifest-v<N>.json``. Either way the state dir is on the local
+    filesystem, since versions are discovered with ``os.listdir``.
+
+    **Seeding.** A ``seeded`` job needs version 0 before ``start()``
+    (``{state_dir}/v0``, or ``manifest_state.seed_manifest_state``)
+    and fails fast without it; if the dir later loses every version,
+    the next batch raises a "no committed state" error instead of
+    failing opaquely. An unseeded job treats absent state as empty.
+
+    **Retention.** ``gc_every_n_batches`` collects ``state_dir`` on the
+    batch thread after every Nth commit, so it never races a commit,
+    keeping ``gc_keep_last`` versions. That must be ≥ 2: after a crash
+    between the ``v{b+1}`` write and the checkpoint commit, the
+    re-issued batch ``b`` needs a version ≤ b, which GC with
+    ``keep_last=1`` would already have deleted (an unseeded job would
+    then silently restart from empty state).
+
+    ``step(batch, prev, batch_id, in_version)`` gets the batch with its
+    stream lineage cut, the state at ``in_version`` (``prev`` and
+    ``in_version`` are None for unseeded jobs with no state yet) and
+    writes its ``v{batch_id+1}`` outputs. Each batch logs one INFO
+    record with its id, input and output versions and wall seconds.
+
+    Returns the started StreamingQuery (caller stops it).
+    """
+    from mapreducewordcount_spark.streaming import manifest_state as ms
+
     if gc_every_n_batches and gc_keep_last < 2:
         raise ValueError(
-            f"gc_keep_last must be >= 2 when gc_every_n_batches is "
-            f"set (got {gc_keep_last}): keep_last=1 cannot cover the "
-            "checkpoint replay horizon — a crash between the state "
-            "write and the checkpoint commit would leave the "
-            "redelivered batch no version <= its batch_id to read")
+            f"gc_keep_last must be >= 2 when gc_every_n_batches is set "
+            f"(got {gc_keep_last}): a batch re-issued after a crash "
+            "must still find a state version <= its batch_id")
+    spark = stream.sparkSession
+    if state_format == "manifest":
+        resolve, gc = ms.latest_manifest_version, ms.gc_manifest_state
+        read = partial(ms.read_manifest_state, spark)
+        seed_how = "it with manifest_state.seed_manifest_state"
+    else:
+        resolve = partial(latest_state_version, spark)
+        read = partial(read_state_version, spark)
+        gc = gc_versioned_state
+        seed_how = f"{state_dir}/v0 with a Spark parquet write"
+    if seeded and resolve(state_dir) is None:
+        raise ValueError(
+            f"no committed state under {state_dir}: seed {seed_how} "
+            "before start() (state dirs are local-filesystem only)")
 
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        t0 = time.perf_counter()
+        in_version = resolve(state_dir, at_most=batch_id)
+        if in_version is None and seeded:
+            raise ValueError(
+                f"no committed state under {state_dir}: the state dir "
+                f"lost its versions mid-stream; re-seed {state_dir} "
+                "before restarting")
+        prev = None if in_version is None else read(state_dir, in_version)
+        step(batch_df.localCheckpoint(eager=True), prev, batch_id,
+             in_version)
+        if gc_every_n_batches and (batch_id + 1) % gc_every_n_batches == 0:
+            gc(state_dir, keep_last=gc_keep_last)
+        log.info("%s batch %d: read version %s, wrote version %d in "
+                 "%.3f s", state_dir, batch_id, in_version, batch_id + 1,
+                 time.perf_counter() - t0)
+
+    return (stream.writeStream.outputMode("append")
+            .option("checkpointLocation", checkpoint_dir)
+            .foreachBatch(run).start())
+
+
+# --- streaming CDC: incremental view maintenance over a change feed ---------
 
 def start_cdc_agg_refresh(changes: DataFrame, *, snapshot_dir: str,
                           view_dir: str, checkpoint_dir: str,
@@ -859,58 +934,30 @@ def start_cdc_agg_refresh(changes: DataFrame, *, snapshot_dir: str,
                           state_format: str = "versioned",
                           gc_every_n_batches: int | None = None,
                           gc_keep_last: int = 2):
-    """Streaming IVM — the MUTATION leg of the streaming family
-    (VERDICT r7 next#6): maintain a materialized aggregate view over
-    a CDC change feed via ``foreachBatch``, refreshing through the
-    same delta rules as the batch operator
+    """Streaming IVM — the MUTATION leg of the streaming family:
+    maintain a materialized aggregate view over a CDC change feed,
+    refreshing through the same delta rules as the batch operator
     (``operators/ivm.incremental_agg_refresh``) so stream/batch
     parity is an assertion, not a hope.
 
-    State is the pair (snapshot, view) kept as VERSIONED parquet
-    dirs ON THE LOCAL FILESYSTEM (version discovery walks the dir
-    with ``os.listdir`` — a remote object store needs the table-
-    format swap below): the caller MUST seed ``{snapshot_dir}/v0``
-    with the initial table before ``start()`` (an unseeded dir
-    raises immediately, not as an opaque AnalysisException inside
-    the stream — ADVICE r8); micro-batch ``b`` reads version ``b``
-    and commits version ``b+1`` of both dirs. Version-addressed writes make redelivery
-    idempotent (a replayed batch rewrites ITS OWN output version and
-    re-reads its original input — epoch-based exactly-once at the
-    sink), and old versions double as time travel for the diff/SCD2
-    companions. A production deployment swaps the dirs for a table
-    format with atomic commit; the refresh algebra is unchanged.
-
+    Runs on :func:`versioned_state_loop`, seeded: the caller commits
+    the initial table as version 0 of ``snapshot_dir``. Batch ``b``
+    writes ``{view_dir}/v{b+1}`` and snapshot version ``b+1``; old
+    versions double as time travel for the diff/SCD2 companions.
     Per batch the snapshot is read ONLY through the delta path's
     changed-key semi-join plus the merge's anti-join — O(changes +
-    groups) compute; the snapshot rewrite here is the simple full
-    copy (the honest cost of plain parquet state).
+    groups) compute. The plain snapshot rewrite is a full copy (the
+    honest cost of plain parquet state); ``state_format="manifest"``
+    keeps the snapshot as hash-bucketed segments and rewrites ONLY the
+    buckets the batch's keys touch (copy-on-write) — O(changed
+    buckets), not O(|state|). Seed that format with
+    ``manifest_state.seed_manifest_state(df, snapshot_dir, keys)``.
 
-    ``state_format="manifest"`` is the table-format seam (VERDICT r9
-    next#6, ``streaming/manifest_state``): the snapshot lives as
-    immutable hash-bucketed segments named by a tiny per-version
-    manifest; the commit rewrites ONLY the buckets the batch's keys
-    touch (copy-on-write) and swaps the manifest in atomically —
-    O(changed buckets), not O(|state|). Seed with
-    ``manifest_state.seed_manifest_state(df, snapshot_dir, keys)``;
-    the version/redelivery contract is identical.
-
-    ``gc_every_n_batches`` (VERDICT r11 next#5) wires retention INTO
-    the loop: after every Nth commit the batch thread GCs the
-    SNAPSHOT state — ``gc_manifest_state`` in manifest format,
-    ``gc_versioned_state`` for plain versioned dirs — so a
-    long-running stream's storage is O(live state × gc_keep_last),
-    not O(stream length), with no out-of-band job. Running it on the
-    commit thread (never concurrently with a commit) is what makes
-    it safe; the manifest GC's future-version guard additionally
-    protects any misconfigured external runner. ``gc_keep_last``
-    must cover the checkpoint replay horizon: a redelivered batch
-    re-reads the highest committed version ≤ its batch_id, and Spark
-    replays at most the youngest uncommitted batch, so the default 2
-    (current + previous) is the floor — raise it only to keep extra
-    time-travel versions. The VIEW dir is deliberately not GC'd: it
-    is the stream's output history (the diff/SCD2 time-travel
-    surface), not recoverable state — prune it with an explicit
-    ``gc_versioned_state(view_dir, ...)`` if history isn't wanted.
+    ``gc_every_n_batches`` collects the SNAPSHOT. The view dir is
+    deliberately not collected: it is the stream's output history (the
+    diff/SCD2 time-travel surface), not recoverable state — prune it
+    with an explicit ``gc_versioned_state(view_dir, ...)`` if history
+    isn't wanted.
 
     Returns the started StreamingQuery (caller stops it).
     """
@@ -920,54 +967,17 @@ def start_cdc_agg_refresh(changes: DataFrame, *, snapshot_dir: str,
     from mapreducewordcount_spark.operators.merge import merge_upsert
     from mapreducewordcount_spark.streaming import manifest_state as ms
 
-    _check_loop_gc_keep_last(gc_every_n_batches, gc_keep_last)
     spark = changes.sparkSession
     klist = list(keys)
-    manifest = state_format == "manifest"
-    latest0 = (ms.latest_manifest_version(snapshot_dir) if manifest
-               else latest_state_version(spark, snapshot_dir))
-    if latest0 is None:
-        raise ValueError(
-            f"no committed state under {snapshot_dir}: seed "
-            + (f"it with manifest_state.seed_manifest_state before "
-               if manifest else f"{snapshot_dir}/v0 with the initial "
-               "snapshot before ")
-            + "start() (note: state dirs are local-filesystem only — "
-            "version discovery uses os.listdir)")
 
-    def refresh(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # normal flow: input version == batch id (seed v0, batch b
-        # commits v{b+1}); redelivery re-reads its ORIGINAL input even
-        # though its own output version already exists. Resolution is
-        # the highest committed version ≤ batch_id (ADVICE r11): empty
-        # batches commit nothing, so the version sequence has holes a
-        # blind min(batch_id, latest) would read and crash-loop on.
-        # The start() seed check does not survive a state dir removed
-        # MID-stream, so re-raise the seed-first error here instead of
-        # an opaque failure (ADVICE r9).
-        in_version = (ms.latest_manifest_version(snapshot_dir,
-                                                 at_most=batch_id)
-                      if manifest
-                      else latest_state_version(spark, snapshot_dir,
-                                                at_most=batch_id))
-        if in_version is None:
-            raise ValueError(
-                f"no committed state under {snapshot_dir}: the state "
-                "dir lost its versions mid-stream — re-seed "
-                f"{snapshot_dir} before restarting")
-        snap = (ms.read_manifest_state(spark, snapshot_dir, in_version)
-                if manifest
-                else read_state_version(spark, snapshot_dir, in_version))
-        batch = batch_df.localCheckpoint(eager=True)  # cut stream lineage
-
+    def step(batch: DataFrame, snap: DataFrame, batch_id: int,
+             in_version: int) -> None:
         view = incremental_agg_refresh(snap, batch, klist, group_col,
                                        value_col, version_col=version_col,
                                        op_col=op_col)
         view.write.mode("overwrite").parquet(
             f"{view_dir}/v{batch_id + 1}")
-        if manifest:
+        if state_format == "manifest":
             # copy-on-write: merge and rewrite ONLY the buckets the
             # batch touches; untouched segments carry forward as
             # manifest entries (zero data bytes moved)
@@ -981,24 +991,18 @@ def start_cdc_agg_refresh(changes: DataFrame, *, snapshot_dir: str,
                                        op_col=op_col)
             ms.commit_cow(new_changed, changed, snapshot_dir,
                           in_version, batch_id + 1)
-            if (gc_every_n_batches
-                    and (batch_id + 1) % gc_every_n_batches == 0):
-                ms.gc_manifest_state(snapshot_dir,
-                                     keep_last=gc_keep_last)
         else:
             new_snap = merge_upsert(snap, batch, klist,
                                     version_col=version_col,
                                     op_col=op_col)
             new_snap.write.mode("overwrite").parquet(
                 f"{snapshot_dir}/v{batch_id + 1}")
-            if (gc_every_n_batches
-                    and (batch_id + 1) % gc_every_n_batches == 0):
-                gc_versioned_state(snapshot_dir,
-                                   keep_last=gc_keep_last)
 
-    return (changes.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(refresh).start())
+    return versioned_state_loop(
+        changes, step, state_dir=snapshot_dir,
+        checkpoint_dir=checkpoint_dir, seeded=True,
+        state_format=state_format, gc_every_n_batches=gc_every_n_batches,
+        gc_keep_last=gc_keep_last)
 
 
 def start_chunk_index_maintenance(docs: DataFrame, *, index_dir: str,
@@ -1009,43 +1013,32 @@ def start_chunk_index_maintenance(docs: DataFrame, *, index_dir: str,
                                   state_format: str = "versioned",
                                   gc_every_n_batches: int | None = None,
                                   gc_keep_last: int = 2):
-    """Streaming twin of the round-9 chunk family: as document
-    micro-batches arrive, chunk them (``operators/cdchunk``), probe
-    the chunk hashes against the maintained index, append a per-batch
-    per-source new/dup report, and commit the grown index — the
-    continuous-crawl shape where each re-crawled page pays storage
-    only for the chunks it actually changed.
+    """Streaming twin of the chunk family: as document micro-batches
+    arrive, chunk them (``operators/cdchunk``), probe the chunk hashes
+    against the maintained index, write a per-batch per-source new/dup
+    report, and commit the grown index — the continuous-crawl shape
+    where each re-crawled page pays storage only for the chunks it
+    actually changed.
 
-    State discipline is identical to :func:`start_cdc_agg_refresh`:
-    the index is a VERSIONED parquet dir on the LOCAL filesystem,
-    seeded at ``{index_dir}/v0`` (an empty frame with schema
-    ``chunk_md5 string, length int`` is a legitimate seed — but it
-    must exist, and an unseeded dir raises before ``start()``);
-    micro-batch ``b`` reads ``min(b, latest)`` and writes ``v{b+1}``
-    of the index plus ``v{b+1}`` of the report, so redelivery
-    rewrites its own output version idempotently.
+    Runs on :func:`versioned_state_loop`, seeded: version 0 of
+    ``index_dir`` must exist before ``start()``, and an empty frame
+    with schema ``chunk_md5 string, length int`` is a legitimate
+    seed. Batch ``b`` writes index version ``b+1`` and
+    ``{report_dir}/v{b+1}``.
 
     Per batch the index is touched ONLY through the hash anti-join
     (16-byte keys); chunk bodies never shuffle; the report is one
     grouped aggregate over the batch. The full-index rewrite per
     version is plain-parquet state's honest cost;
-    ``state_format="manifest"`` (``streaming/manifest_state``) is the
-    table-format seam: the index is append-only, so each batch
-    commits ONE new segment holding its genuinely-new hashes plus a
-    tiny manifest naming the live segments — O(new chunks) write
-    cost, not O(|index|). Seed with
-    ``manifest_state.seed_manifest_state(df, index_dir,
-    ["chunk_md5"])``; version/redelivery contract identical.
-
-    ``gc_every_n_batches``/``gc_keep_last`` wire index retention
-    into the commit thread exactly as in
-    :func:`start_cdc_agg_refresh` (see there for the replay-horizon
-    floor on ``gc_keep_last``): manifest format GCs superseded
-    manifests (for this append-only index all live segments are
-    shared, so manifests are the only garbage — the parameter
-    matters more the day a compaction rewrite supersedes segments);
-    plain versioned format drops old full-copy ``v<N>`` dirs, where
-    the win is the entire O(|index|) copy per batch.
+    ``state_format="manifest"`` commits ONE new segment holding the
+    batch's genuinely-new hashes plus a tiny manifest naming the live
+    segments — O(new chunks) write cost, not O(|index|). Seed that
+    format with ``manifest_state.seed_manifest_state(df, index_dir,
+    ["chunk_md5"])``. With ``gc_every_n_batches`` the manifest format
+    collects superseded manifests (for this append-only index all live
+    segments are shared, so manifests are the only garbage), and the
+    plain format drops old full-copy ``v<N>`` dirs, where the win is
+    the entire O(|index|) copy per batch.
 
     Returns the started StreamingQuery (caller stops it).
     """
@@ -1054,40 +1047,9 @@ def start_chunk_index_maintenance(docs: DataFrame, *, index_dir: str,
     )
     from mapreducewordcount_spark.streaming import manifest_state as ms
 
-    _check_loop_gc_keep_last(gc_every_n_batches, gc_keep_last)
-    spark = docs.sparkSession
-    manifest = state_format == "manifest"
-    latest0 = (ms.latest_manifest_version(index_dir) if manifest
-               else latest_state_version(spark, index_dir))
-    if latest0 is None:
-        raise ValueError(
-            f"no committed state under {index_dir}: seed "
-            + ("it with manifest_state.seed_manifest_state "
-               if manifest else f"{index_dir}/v0 ")
-            + "(an empty chunk_md5/length frame is fine) before "
-            "start(); state dirs are local-filesystem only")
-
-    def refresh(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # highest committed version ≤ batch_id (ADVICE r11 — see
-        # start_cdc_agg_refresh for the empty-batch-hole rationale)
-        in_version = (ms.latest_manifest_version(index_dir,
-                                                 at_most=batch_id)
-                      if manifest
-                      else latest_state_version(spark, index_dir,
-                                                at_most=batch_id))
-        if in_version is None:  # state dir removed mid-stream (ADVICE r9)
-            raise ValueError(
-                f"no committed state under {index_dir}: the state "
-                "dir lost its versions mid-stream — re-seed "
-                f"{index_dir} before restarting")
-        index = (ms.read_manifest_state(spark, index_dir, in_version)
-                 if manifest
-                 else read_state_version(spark, index_dir, in_version)) \
-            .select("chunk_md5", "length")
-        batch = batch_df.localCheckpoint(eager=True)
-
+    def step(batch: DataFrame, index: DataFrame, batch_id: int,
+             in_version: int) -> None:
+        index = index.select("chunk_md5", "length")
         chunks = cdc_chunk_table(batch, id_col=id_col,
                                  text_col=text_col)
         with_src = chunks.join(
@@ -1113,28 +1075,21 @@ def start_chunk_index_maintenance(docs: DataFrame, *, index_dir: str,
         fresh = (probed.filter(F.col("__idx").isNull())
                  .groupBy("chunk_md5")
                  .agg(F.min("length").alias("length")))
-        if manifest:
+        if state_format == "manifest":
             # append-only commit: one segment with the new hashes,
             # manifest names it — no index bytes rewritten
             ms.commit_append(fresh.select("chunk_md5", "length"),
                              index_dir, in_version, batch_id + 1)
-            if (gc_every_n_batches
-                    and (batch_id + 1) % gc_every_n_batches == 0):
-                ms.gc_manifest_state(index_dir,
-                                     keep_last=gc_keep_last)
         else:
             new_index = index.unionByName(
                 fresh.select("chunk_md5", "length")).distinct()
             new_index.write.mode("overwrite").parquet(
                 f"{index_dir}/v{batch_id + 1}")
-            if (gc_every_n_batches
-                    and (batch_id + 1) % gc_every_n_batches == 0):
-                gc_versioned_state(index_dir,
-                                   keep_last=gc_keep_last)
 
-    return (docs.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(refresh).start())
+    return versioned_state_loop(
+        docs, step, state_dir=index_dir, checkpoint_dir=checkpoint_dir,
+        seeded=True, state_format=state_format,
+        gc_every_n_batches=gc_every_n_batches, gc_keep_last=gc_keep_last)
 
 
 def start_reservoir_maintenance(docs: DataFrame, *, state_dir: str,
@@ -1152,82 +1107,54 @@ def start_reservoir_maintenance(docs: DataFrame, *, state_dir: str,
     MERGEABLE, so the maintenance step is one line of algebra —
     ``state ← bottom_k(state ∪ batch)`` — and the post-batch state
     provably equals the batch operator over the union of everything
-    ever seen (boundary-parity pytest-pinned), with no RNG state to
-    checkpoint and replay-stable results (the hash IS the
-    randomness; a redelivered batch re-derives the same sample).
-    A per-group ``n_seen`` count rides the same state so a consumer
-    can turn the sample into rates; it sum-merges exactly.
+    ever seen, with no RNG state to checkpoint and replay-stable
+    results (the hash IS the randomness; a redelivered batch
+    re-derives the same sample). A per-group ``n_seen`` count rides
+    the same state so a consumer can turn the sample into rates; it
+    sum-merges exactly.
 
-    State discipline matches :func:`start_cms_heavy_hitters`:
-    versioned parquet, NO caller seed (an absent dir IS the empty
-    reservoir), batch ``b`` reads the highest committed version ≤ b
-    and writes ``v{b+1}`` (idempotent redelivery), and
-    ``gc_every_n_batches``/``gc_keep_last`` wire
-    :func:`gc_versioned_state` into the commit thread.
+    Runs on :func:`versioned_state_loop` over plain versioned parquet
+    with no seed (an absent dir is the empty reservoir).
 
     Returns the started StreamingQuery (caller stops it).
     """
-    _check_loop_gc_keep_last(gc_every_n_batches, gc_keep_last)
-    spark = docs.sparkSession
+    from pyspark.sql import Window
 
-    def refresh(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        from pyspark.sql import Window
+    from mapreducewordcount_spark.operators.sampling import reservoir_hash
 
-        batch = (batch_df
-                 .select(F.col(group_col).alias("grp"),
-                         F.col(id_col).alias("id"))
-                 .groupBy("grp", "id")
-                 .agg(F.count(F.lit(1)).alias("n_seen"))
-                 .localCheckpoint(eager=True))
-        in_version = latest_state_version(spark, state_dir,
-                                          at_most=batch_id)
-        if in_version is None:
-            pool = batch
-            prev_counts = batch.select("grp").limit(0) \
-                .withColumn("n_prev", F.lit(0).cast("long"))
-        else:
-            prev = read_state_version(spark, state_dir, in_version)
-            pool = prev.select("grp", "id",
-                               F.lit(1).cast("long").alias("n_seen")) \
-                .unionByName(batch)
-            prev_counts = (prev.groupBy("grp")
-                           .agg(F.max("n_seen_grp").alias("n_prev")))
+    def step(batch: DataFrame, prev, batch_id: int, in_version) -> None:
+        ids = batch.select(F.col(group_col).alias("grp"),
+                           F.col(id_col).alias("id"))
+        counts = ids.groupBy("grp").agg(
+            F.count(F.lit(1)).alias("n_seen_grp"))
+        if prev is not None:
+            ids = ids.unionByName(prev.select("grp", "id"))
+            counts = (counts
+                      .unionByName(prev.groupBy("grp").agg(
+                          F.max("n_seen_grp").alias("n_seen_grp")))
+                      .groupBy("grp")
+                      .agg(F.sum("n_seen_grp").alias("n_seen_grp")))
         # the shared expression — NOT a local copy — so the
         # stream/batch bottom-k parity can't be broken by editing
-        # one side's salt (ADVICE r12)
-        from mapreducewordcount_spark.operators.sampling import (
-            reservoir_hash,
-        )
-        hk = reservoir_hash("id")
-        w = Window.partitionBy("grp").orderBy(hk, "id")
+        # one side's salt
+        w = Window.partitionBy("grp").orderBy(reservoir_hash("id"), "id")
         # duplicate ids across state∪batch collapse first (an id
         # re-delivered or re-crawled must not occupy two slots)
-        dedup = pool.groupBy("grp", "id").agg(
-            F.sum("n_seen").alias("__n"))
-        kept = (dedup
+        kept = (ids.distinct()
                 .withColumn("__r", F.row_number().over(w))
                 .filter(F.col("__r") <= k)
                 .select("grp", "id"))
-        n_batch = batch.groupBy("grp").agg(
-            F.sum("n_seen").alias("n_batch"))
-        counts = (n_batch.join(prev_counts, "grp", "full")
-                  .select("grp",
-                          (F.coalesce("n_prev", F.lit(0))
-                           + F.coalesce("n_batch", F.lit(0)))
-                          .alias("n_seen_grp")))
         out = kept.join(counts, "grp").select(
             "grp", "id", F.col("n_seen_grp").cast("long"))
         out.write.mode("overwrite").parquet(
             f"{state_dir}/v{batch_id + 1}")
-        if (gc_every_n_batches
-                and (batch_id + 1) % gc_every_n_batches == 0):
-            gc_versioned_state(state_dir, keep_last=gc_keep_last)
 
-    return (docs.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(refresh).start())
+    # project before the loop's lineage cut: the checkpointed batch
+    # then holds two columns, not whole documents
+    return versioned_state_loop(
+        docs.select(group_col, id_col), step, state_dir=state_dir,
+        checkpoint_dir=checkpoint_dir, seeded=False,
+        gc_every_n_batches=gc_every_n_batches, gc_keep_last=gc_keep_last)
 
 
 def start_ann_index_maintenance(embs: DataFrame, *, index_dir: str,
@@ -1238,38 +1165,30 @@ def start_ann_index_maintenance(embs: DataFrame, *, index_dir: str,
                                 state_format: str = "versioned",
                                 gc_every_n_batches: int | None = None,
                                 gc_keep_last: int = 2):
-    """Streaming twin of the incremental ANN append path (VERDICT r12
-    next#5 closed batch-side this round; this is the loop form): as
-    embedding micro-batches arrive, route them to the FROZEN coarse
-    quantizer, residual-encode against the FROZEN codebooks
+    """Streaming twin of the incremental ANN append path: as embedding
+    micro-batches arrive, route them to the FROZEN coarse quantizer,
+    residual-encode against the FROZEN codebooks
     (``operators/pq.ivfpq_append`` — the per-batch work is O(batch)
-    regardless of index size, zero shuffle), append a per-list drift
+    regardless of index size, zero shuffle), write a per-list drift
     report, and commit the grown codes index. The continuous form of
     FAISS ``add()``: the model artifacts never change inside the
     loop; the REPORT is what tells the operator the model has gone
     stale (re-train = an offline rebuild, then a new loop seeded
     from it).
 
-    State discipline is :func:`start_chunk_index_maintenance`'s
-    verbatim — the codes index is append-only:
-
-    - versioned parquet seeded at ``{index_dir}/v0`` with the
-      offline build's codes ``(neighbor_id long, list_id long,
-      codes array<int>)`` (an empty frame with that schema is a
-      legitimate cold start — the model artifacts still come from an
-      offline train); an unseeded dir raises before ``start()``;
-    - batch ``b`` reads the highest committed version ≤ b and writes
-      ``v{b+1}`` of index AND report — idempotent redelivery; empty
-      batches commit nothing (version holes expected);
-    - already-indexed ids are dropped by an anti-join on the 8-byte
-      key (a re-delivered or re-crawled vector must not occupy two
-      index slots);
-    - ``state_format="manifest"`` commits ONE segment holding the
-      batch's new codes + a manifest (O(new vectors), not
-      O(|index|)); seed with ``manifest_state.seed_manifest_state(
-      codes_df, index_dir, ["neighbor_id"])``;
-    - ``gc_every_n_batches``/``gc_keep_last`` wire retention into
-      the commit thread (replay-horizon floor enforced).
+    Runs on :func:`versioned_state_loop`, seeded with the offline
+    build's codes ``(neighbor_id long, list_id long, codes
+    array<int>)`` as version 0 of ``index_dir`` (an empty frame with
+    that schema is a legitimate cold start — the model artifacts still
+    come from an offline train). Batch ``b`` writes index version
+    ``b+1`` and ``{report_dir}/v{b+1}``. The codes index is
+    append-only: already-indexed ids are dropped by an anti-join on
+    the 8-byte key (a re-delivered or re-crawled vector must not
+    occupy two index slots), and ``state_format="manifest"`` commits
+    ONE segment holding the batch's new codes + a manifest (O(new
+    vectors), not O(|index|)); seed that format with
+    ``manifest_state.seed_manifest_state(codes_df, index_dir,
+    ["neighbor_id"])``.
 
     The per-batch report row set — ``(list_id, n_new, sum_res2_u,
     mean_res2_new, batch_id)`` with the SHARED µ-scaled integer norm
@@ -1283,43 +1202,12 @@ def start_ann_index_maintenance(embs: DataFrame, *, index_dir: str,
     Returns the started StreamingQuery (caller stops it).
     """
     from mapreducewordcount_spark.operators import pq
+    from mapreducewordcount_spark.operators.similarity import ivf_assign
     from mapreducewordcount_spark.streaming import manifest_state as ms
 
-    _check_loop_gc_keep_last(gc_every_n_batches, gc_keep_last)
-    spark = embs.sparkSession
-    manifest = state_format == "manifest"
-    latest0 = (ms.latest_manifest_version(index_dir) if manifest
-               else latest_state_version(spark, index_dir))
-    if latest0 is None:
-        raise ValueError(
-            f"no committed state under {index_dir}: seed "
-            + ("it with manifest_state.seed_manifest_state "
-               if manifest else f"{index_dir}/v0 ")
-            + "with the offline build's codes (an empty "
-            "neighbor_id/list_id/codes frame is a legitimate cold "
-            "start) before start(); state dirs are local-filesystem "
-            "only")
-
-    def refresh(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        in_version = (ms.latest_manifest_version(index_dir,
-                                                 at_most=batch_id)
-                      if manifest
-                      else latest_state_version(spark, index_dir,
-                                                at_most=batch_id))
-        if in_version is None:  # state dir removed mid-stream
-            raise ValueError(
-                f"no committed state under {index_dir}: the state "
-                "dir lost its versions mid-stream — re-seed "
-                f"{index_dir} before restarting")
-        index = (ms.read_manifest_state(spark, index_dir, in_version)
-                 if manifest
-                 else read_state_version(spark, index_dir,
-                                         in_version)) \
-            .select("neighbor_id", "list_id", "codes")
-        batch = batch_df.localCheckpoint(eager=True)
-
+    def step(batch: DataFrame, index: DataFrame, batch_id: int,
+             in_version: int) -> None:
+        index = index.select("neighbor_id", "list_id", "codes")
         fresh = (batch
                  .select(F.col(id_col).alias("neighbor_id"), vec_col)
                  .join(index.select("neighbor_id"), "neighbor_id",
@@ -1327,10 +1215,6 @@ def start_ann_index_maintenance(embs: DataFrame, *, index_dir: str,
         # ivfpq_append unrolled so the assign — upstream of BOTH the
         # report (residuals) and the commit (codes) — checkpoints
         # once and neither consumer re-runs the Arrow argmax
-        from mapreducewordcount_spark.operators.similarity import (
-            ivf_assign,
-        )
-
         assigned_new = ivf_assign(
             fresh, centroids, id_col="neighbor_id",
             vec_col=vec_col).localCheckpoint(eager=True)
@@ -1357,21 +1241,14 @@ def start_ann_index_maintenance(embs: DataFrame, *, index_dir: str,
             f"{report_dir}/v{batch_id + 1}")
 
         new_rows = codes_new.select("neighbor_id", "list_id", "codes")
-        if manifest:
+        if state_format == "manifest":
             ms.commit_append(new_rows, index_dir, in_version,
                              batch_id + 1)
-            if (gc_every_n_batches
-                    and (batch_id + 1) % gc_every_n_batches == 0):
-                ms.gc_manifest_state(index_dir,
-                                     keep_last=gc_keep_last)
         else:
             index.unionByName(new_rows).write.mode("overwrite") \
                 .parquet(f"{index_dir}/v{batch_id + 1}")
-            if (gc_every_n_batches
-                    and (batch_id + 1) % gc_every_n_batches == 0):
-                gc_versioned_state(index_dir,
-                                   keep_last=gc_keep_last)
 
-    return (embs.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(refresh).start())
+    return versioned_state_loop(
+        embs, step, state_dir=index_dir, checkpoint_dir=checkpoint_dir,
+        seeded=True, state_format=state_format,
+        gc_every_n_batches=gc_every_n_batches, gc_keep_last=gc_keep_last)

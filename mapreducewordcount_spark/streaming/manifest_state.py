@@ -1,13 +1,13 @@
 """Manifest-committed parquet state — the table-format seam for the
-streaming mutation twins (VERDICT r9 next#6).
+streaming maintenance jobs (``state_format="manifest"``).
 
 The plain versioned-parquet state in ``streaming/jobs.py`` pays a
 FULL state rewrite per micro-batch (documented honest cost). Real
 table formats (Iceberg/Delta) turn that into an append plus a
 metadata commit: data files are immutable, and a tiny manifest names
 the files that make up each version. This module is that commit
-protocol reduced to its essentials, behind the same seeded-v0 /
-idempotent-redelivery contract the twins already enforce:
+protocol reduced to its essentials, behind the seeded-v0 /
+idempotent-redelivery contract of ``jobs.versioned_state_loop``:
 
 - **Segments** are immutable parquet dirs under
   ``{state_dir}/seg/v{N}/``, hash-bucketed on the state's key
@@ -26,18 +26,19 @@ idempotent-redelivery contract the twins already enforce:
   is O(changed buckets × bucket size), not O(|state|).
 
 Idempotent redelivery is inherited from version addressing: batch
-``b`` reads manifest ``min(b, latest)``, writes segments under the
-deterministic ``seg/v{b+1}`` dir (mode overwrite) and swaps
-``manifest-v{b+1}.json`` in atomically (tmp + ``os.replace``) — a
-replayed batch rewrites its own output version from its original
-input. Commits never delete segments (time travel across retained
-versions); ``gc_manifest_state`` is the explicit retention walker
-(VERDICT r10 next#3): keep the newest ``keep_last`` manifests, drop
+``b`` reads the highest committed manifest version ≤ ``b``, writes
+segments under the deterministic ``seg/v{b+1}`` dir (mode overwrite)
+and swaps ``manifest-v{b+1}.json`` in atomically (tmp +
+``os.replace``) — a replayed batch rewrites its own output version
+from its original input. The manifest file is the commit marker, so
+segments without one are never read. Commits never delete segments
+(time travel across retained versions); ``gc_manifest_state`` is the
+explicit retention walker: keep the newest ``keep_last`` manifests, drop
 every older manifest file, and delete exactly the segment dirs no
 retained manifest references — bounding storage for a long-running
 stream at O(live state × keep_last) instead of O(stream length).
 
-Local-filesystem only, like the twins' state dirs: version discovery
+Local-filesystem only, like the plain state dirs: version discovery
 lists manifest files with ``os.listdir``.
 """
 
@@ -58,11 +59,9 @@ def _bucket_col(key_cols: list[str], n_buckets: int):
 
 def latest_manifest_version(state_dir: str,
                             at_most: int | None = None) -> int | None:
-    """Highest committed manifest version, or None when unseeded.
-    ``at_most`` bounds the search — replay-input resolution for
-    redelivered micro-batches (see jobs.latest_state_version): empty
-    batches commit nothing, so version sequences legitimately have
-    holes and a replay must take the highest version ≤ batch_id."""
+    """Highest committed manifest version, at most ``at_most`` when
+    given (the replay-input resolution of ``jobs.versioned_state_loop``),
+    or None when unseeded."""
     if not os.path.isdir(state_dir):
         return None
     versions = []
@@ -213,7 +212,7 @@ def gc_manifest_state(state_dir: str, keep_last: int = 1) -> dict:
     - Liveness is computed from the retained manifests' path lists,
       never from directory naming conventions.
     - Segments whose version is NEWER than the latest retained
-      manifest are left alone (ADVICE r11): commit_append/commit_cow
+      manifest are left alone: commit_append/commit_cow
       write segments BEFORE committing their manifest, so seg/v{N+1}
       with no manifest-v{N+1} is indistinguishable from an in-flight
       commit — deleting it would yield a manifest referencing
@@ -271,7 +270,7 @@ def gc_manifest_state(state_dir: str, keep_last: int = 1) -> dict:
                 continue
             # never touch segments newer than the latest committed
             # manifest: they may belong to an IN-FLIGHT commit
-            # (segments land before their manifest — ADVICE r11)
+            # (segments land before their manifest)
             if (vdir.startswith("v") and vdir[1:].isdigit()
                     and int(vdir[1:]) > latest_kept):
                 continue

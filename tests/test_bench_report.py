@@ -63,6 +63,27 @@ def test_emit_per_round_artifacts_are_immutable(tmp_path, monkeypatch,
     assert latest["value"] == 2.0  # convenience copy tracks the last run
 
 
+def test_emit_summary_is_keyed_by_core_count(tmp_path, monkeypatch,
+                                             capsys):
+    """Two headline runs in one round on different core counts must
+    leave two summaries: a scaling leg cannot shadow the headline."""
+    import bench
+
+    monkeypatch.setattr(bench, "_REPO", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_ROUND", "15")
+    for cpus, value in (("4", 120.0), ("8", 90.0)):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", cpus)
+        bench._emit({"metric": "headline_total", "value": value,
+                     "unit": "sec", "queries": {"q1": 0.1}})
+    capsys.readouterr()
+    assert sorted(p.name for p in tmp_path.glob("BENCH_SUMMARY_*")) \
+        == ["BENCH_SUMMARY_r15_c4.json", "BENCH_SUMMARY_r15_c8.json"]
+    for cpus, value in ((4, 120.0), (8, 90.0)):
+        summary = json.load(
+            open(tmp_path / f"BENCH_SUMMARY_r15_c{cpus}.json"))
+        assert (summary["cpus"], summary["value"]) == (cpus, value)
+
+
 def test_round_no_from_committed_bench_files(tmp_path, monkeypatch):
     import bench
 

@@ -65,13 +65,16 @@ def test_cli_run_produces_reference_layout(spark, tmp_path):
     assert (out / "out-1").read_text() == ""
 
 
-def test_cli_reference_corpus_byte_parity(spark, tmp_path):
+def test_cli_reference_corpus_byte_parity(spark, tmp_path,
+                                         wordcount_corpus):
     """BASELINE.md gate row 4 as a committed test: full CLI run over
-    the reference's own corpus (config-schema N=6 / M=4, parity
-    tokenizer) and the merged ``out-*`` bytes equal the single-process
-    Counter-oracle rendering byte-for-byte — the engine's complete
-    output contract (tokenization, bucketing, per-bucket code-point
-    sort, '{word} {count}' lines, flat file names) in one assert.
+    a word-count corpus (``wordcount_corpus``: built from the test
+    data, and the reference's own inputs where present; config-schema
+    N=6 / M=4, parity tokenizer) and the merged ``out-*`` bytes equal
+    the single-process Counter-oracle rendering byte-for-byte — the
+    engine's complete output contract (tokenization, bucketing,
+    per-bucket code-point sort, '{word} {count}' lines, flat file
+    names) in one assert.
     """
     import string
     import textwrap
@@ -79,10 +82,7 @@ def test_cli_reference_corpus_byte_parity(spark, tmp_path):
 
     from mapreducewordcount_spark.functions.tokenize import word_tokenize_port
 
-    corpus = "/root/reference/files/inputs"
-    if not os.path.isdir(corpus):
-        import pytest
-        pytest.skip("reference corpus not present")
+    corpus = wordcount_corpus
     out = tmp_path / "out"
     cfg = tmp_path / "config.yaml"
     cfg.write_text(textwrap.dedent(f"""\

@@ -1,7 +1,7 @@
 """Custom Python DataSource (sources/pysource.py): planner unit
 tests (no Spark needed — listing, LPT packing, filter pushdown are
 plain driver-side Python) plus end-to-end parity against the JVM
-text scan on the reference corpus.
+text scan on the word-count corpora (``wordcount_corpus``).
 """
 
 from __future__ import annotations
@@ -15,8 +15,6 @@ from mapreducewordcount_spark.sources.pysource import (
     lpt_pack,
     register_corpus_source,
 )
-
-REF_INPUTS = "/root/reference/files/inputs"
 
 
 # --- planner-side units -----------------------------------------------------
@@ -82,17 +80,19 @@ def test_empty_bins_not_emitted(tmp_path):
 # --- end-to-end against the JVM scan ----------------------------------------
 
 @pytest.fixture()
-def corpus_df(spark):
+def corpus_df(spark, wordcount_corpus):
     # runtime-settable; the shared test session may predate the
     # get_spark default
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     register_corpus_source(spark)
     return (spark.read.format("corpus")
-            .option("path", REF_INPUTS).option("splits", "4").load())
+            .option("path", wordcount_corpus).option("splits", "4").load())
 
 
-def test_corpus_source_matches_jvm_text_scan(spark, corpus_df):
-    jvm = (spark.read.option("pathGlobFilter", "*.txt").text(REF_INPUTS)
+def test_corpus_source_matches_jvm_text_scan(spark, corpus_df,
+                                             wordcount_corpus):
+    jvm = (spark.read.option("pathGlobFilter", "*.txt")
+           .text(wordcount_corpus)
            .filter(F.col("value") != ""))
     ours = corpus_df.filter(F.col("line") != "")
     assert ours.count() == jvm.count()

@@ -310,18 +310,13 @@ def test_stream_hll_registers_matches_batch(spark, tmp_path):
     assert got_est == want_est
 
 
-def test_replay_after_empty_batch_resolves_version_hole(spark, tmp_path):
-    """ADVICE r11 (medium): empty batches commit no state version, so
-    the version sequence has holes; a crash-recovery replay must read
-    the highest committed version <= batch_id, not v{batch_id}
-    blindly — the blind read crash-looped the restarted stream.
-
-    Scenario: batch 0 writes v1, batch 1 is EMPTY (no v2), batch 2
-    reads v1 and writes v3. Deleting the checkpoint commit for batch
-    2 forces its redelivery on restart; the replay must resolve its
-    input back to v1 (not the nonexistent v2) and reproduce v3."""
-    import os
-
+def _hh_replay_job(spark, tmp_path):
+    """Unseeded job for the replay test: CMS heavy hitters, k=2."""
+    from mapreducewordcount_spark.functions.tokenize import tokenize_expr
+    from mapreducewordcount_spark.operators.cms import (
+        cms_build,
+        cms_estimate,
+    )
     from mapreducewordcount_spark.streaming import (
         start_cms_heavy_hitters,
     )
@@ -339,22 +334,120 @@ def test_replay_after_empty_batch_resolves_version_hole(spark, tmp_path):
                                        checkpoint_dir=ckpt,
                                        k=2, pool=4)
 
+    def feed(name, lines):
+        (src / f"{name}.txt").write_text("".join(f"{ln}\n" for ln in lines))
+
+    def result():
+        return {(r.word, r.cms_count) for r in
+                spark.read.parquet(f"{out}/v3").collect()}
+
+    def batch_operator(lines):
+        alldf = spark.createDataFrame([(ln,) for ln in lines],
+                                      "value string")
+        words = alldf.select(
+            F.explode(tokenize_expr("value")).alias("word"))
+        est = cms_estimate(words.distinct(), cms_build(words))
+        return {(r.word, r.cms_count) for r in
+                est.orderBy(F.col("cms_count").desc(), "word")
+                .limit(2).collect()}
+
+    batches = (["alpha alpha beta"], [], ["beta beta gamma"])
+    return (start, feed, result, batch_operator, batches, f"{state}/cells",
+            ckpt)
+
+
+def _cdc_replay_job(spark, tmp_path):
+    """Seeded job for the replay test: CDC aggregate refresh."""
+    import json
+
+    from mapreducewordcount_spark.operators.merge import merge_upsert
+    from mapreducewordcount_spark.streaming.jobs import (
+        start_cdc_agg_refresh,
+    )
+
+    src = tmp_path / "cdc"
+    src.mkdir()
+    snap, view, ckpt = (str(tmp_path / d) for d in
+                        ("snap", "view", "ckpt"))
+    cols = "k long, grp string, v long, _version int, _op string"
+    seed = spark.createDataFrame(
+        [(1, "a", 100), (2, "a", 200), (3, "b", 300)],
+        "k long, grp string, v long")
+    seed.write.parquet(f"{snap}/v0")
+
+    def start():
+        stream = (spark.readStream.schema(cols)
+                  .option("maxFilesPerTrigger", "1").json(str(src)))
+        return start_cdc_agg_refresh(
+            stream, snapshot_dir=snap, view_dir=view,
+            checkpoint_dir=ckpt, keys=["k"], group_col="grp",
+            value_col="v")
+
+    def feed(name, rows):
+        (src / f"{name}.json").write_text("".join(
+            json.dumps(dict(zip(("k", "grp", "v", "_version", "_op"),
+                                r))) + "\n" for r in rows))
+
+    def result():
+        return {(r.grp, r.n_rows, r.total) for r in
+                spark.read.parquet(f"{view}/v3").collect()}
+
+    def batch_operator(rows):
+        merged = merge_upsert(seed, spark.createDataFrame(rows, cols),
+                              ["k"])
+        return {(r.grp, r.n, r.t) for r in
+                merged.groupBy("grp")
+                .agg(F.count(F.lit(1)).alias("n"),
+                     F.sum("v").alias("t")).collect()}
+
+    batches = ([(1, "a", 150, 2, "U"), (3, "b", 0, 3, "D")], [],
+               [(4, "c", 400, 4, "U"), (2, "b", 250, 5, "U")])
+    return start, feed, result, batch_operator, batches, snap, ckpt
+
+
+@pytest.mark.parametrize("job", ["cms", "cdc"])
+def test_replay_after_empty_batch_resolves_version_hole(spark, tmp_path,
+                                                        job, caplog):
+    """Empty batches commit no state version, so the version sequence
+    has holes; a crash-recovery replay must read the highest committed
+    version <= batch_id, not v{batch_id} blindly — the blind read
+    crash-looped the restarted stream.
+
+    Scenario: batch 0 writes v1, batch 1 is EMPTY (no v2), batch 2
+    reads v1 and writes v3. Deleting the checkpoint commit for batch
+    2 (a kill between the state write and the checkpoint commit)
+    forces its redelivery on restart; the replay must resolve its
+    input back to v1 (not the nonexistent v2) and reproduce v3, which
+    equals the batch operator over all input. Runs on an unseeded job
+    (CMS heavy hitters: absent state is empty) and a seeded one (CDC
+    refresh: v0 is the caller's seed)."""
+    import logging
+    import os
+
+    make = _hh_replay_job if job == "cms" else _cdc_replay_job
+    start, feed, result, batch_operator, batches, state, ckpt = make(
+        spark, tmp_path)
+
+    caplog.set_level(logging.INFO,
+                     logger="mapreducewordcount_spark.streaming.jobs")
     q = start()
     try:
-        (src / "b0.txt").write_text("alpha alpha beta\n")
-        q.processAllAvailable()
-        (src / "b1.txt").write_text("")      # empty: no state commit
-        q.processAllAvailable()
-        (src / "b2.txt").write_text("beta beta gamma\n")
-        q.processAllAvailable()
+        for i, rows in enumerate(batches):
+            feed(f"b{i}", rows)        # b1 is empty: no state commit
+            q.processAllAvailable()
     finally:
         q.stop()
         q.awaitTermination()  # release the checkpoint before restart
 
-    cells = f"{state}/cells"
-    assert sorted(os.listdir(cells)) == ["v1", "v3"]  # the hole is real
-    before = {(r.word, r.cms_count) for r in
-              spark.read.parquet(f"{out}/v3").collect()}
+    first = 0 if job == "cdc" else None
+    assert sorted(n for n in os.listdir(state) if n.startswith("v")) \
+        == (["v0", "v1", "v3"] if job == "cdc" else ["v1", "v3"])
+    # one progress record per NON-empty batch: (batch, in, out)
+    progress = [r.args[1:4] for r in caplog.records
+                if r.name == "mapreducewordcount_spark.streaming.jobs"]
+    assert progress == [(0, first, 1), (2, 1, 3)]
+    want = batch_operator([r for b in batches for r in b])
+    assert result() == want
 
     # forget batch 2's commit -> structured streaming redelivers it
     # (the .crc sidecar must go too or the re-commit rename fails)
@@ -366,33 +459,50 @@ def test_replay_after_empty_batch_resolves_version_hole(spark, tmp_path):
     finally:
         q.stop()
 
-    after = {(r.word, r.cms_count) for r in
-             spark.read.parquet(f"{out}/v3").collect()}
-    assert after == before  # idempotent replay, no crash loop
-    assert dict(after)["beta"] == 3  # batch-0 occurrence still counted
+    assert result() == want  # idempotent replay, no crash loop
 
 
-def test_version_resolution_at_most_bounds():
+def test_version_resolution_at_most_bounds(spark):
     """Unit pins for the replay-input resolution on both state
-    layouts (plain versioned dirs and manifest files)."""
+    layouts (plain versioned dirs and manifest files). A plain v<N>
+    counts only once Spark's committer has written its _SUCCESS
+    marker: a half-written version (a crash mid-write, or a write
+    still in flight) is skipped by both resolution and reads."""
     import os
     import tempfile
 
     from mapreducewordcount_spark.streaming.jobs import (
         latest_state_version,
+        read_state_version,
     )
     from mapreducewordcount_spark.streaming.manifest_state import (
         latest_manifest_version,
     )
 
+    def half_written(d, v):
+        os.makedirs(f"{d}/v{v}/_temporary/0/task_0")
+        with open(f"{d}/v{v}/part-00000-x.snappy.parquet", "wb") as f:
+            f.write(b"PAR1\x15\x00")  # truncated: no footer
+
     with tempfile.TemporaryDirectory() as d:
         for v in (0, 1, 3, 7):
             os.makedirs(f"{d}/v{v}")
+            open(f"{d}/v{v}/_SUCCESS", "w").close()
         assert latest_state_version(None, d) == 7
         assert latest_state_version(None, d, at_most=7) == 7
         assert latest_state_version(None, d, at_most=6) == 3
         assert latest_state_version(None, d, at_most=2) == 1
         assert latest_state_version(None, d, at_most=-1) is None
+        half_written(d, 8)
+        half_written(d, 5)
+        assert latest_state_version(None, d) == 7
+        assert latest_state_version(None, d, at_most=8) == 7
+        assert latest_state_version(None, d, at_most=5) == 3
+
+    with tempfile.TemporaryDirectory() as d:
+        spark.range(3).write.parquet(f"{d}/v1")
+        half_written(d, 2)
+        assert read_state_version(spark, d).count() == 3
 
     with tempfile.TemporaryDirectory() as d:
         for v in (0, 2, 5):

@@ -583,6 +583,7 @@ def test_gc_versioned_state_keeps_last_k_existing(tmp_path):
     for v in (0, 2, 5):
         os.makedirs(f"{d}/v{v}")
         open(f"{d}/v{v}/part-0.parquet", "w").write("x")
+        open(f"{d}/v{v}/_SUCCESS", "w").close()
     report = gc_versioned_state(d, keep_last=2)
     assert report == {"kept_versions": [2, 5], "removed_versions": [0]}
     assert sorted(os.listdir(d)) == ["v2", "v5"]
